@@ -63,10 +63,10 @@ class Engine:
                       query_vec: Sequence[float] | Column, k: int = 10,
                       metric: str = "cosine", filter: Column | None = None,
                       **kw) -> DataFrame:
-        """Exact top-k vector search (cosine/dot/l2, all JVM-codegen
-        expressions); ``filter`` prunes BEFORE the distance top-k — the
-        pre-filter hybrid the reference post-filters for (demo.ipynb
-        c13). See operators.knn.vector_search."""
+        """Exact top-k vector search (cosine/dot/l2; one Arrow numpy
+        kernel, no code compiled per query); ``filter`` prunes BEFORE the
+        distance top-k — the pre-filter hybrid the reference post-filters
+        for (demo.ipynb c13). See operators.knn.vector_search."""
         df = self.table(table) if isinstance(table, str) else table
         return knn.vector_search(df, vector_col, query_vec, k=k,
                                  metric=metric, filter=filter, **kw)

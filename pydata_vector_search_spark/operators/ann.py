@@ -31,9 +31,10 @@ from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from pydata_vector_search_spark.functions.vector import query_vector_lit
+from pydata_vector_search_spark.functions.vector import distance_arrow
 from pydata_vector_search_spark.operators.knn import vector_search
 
 _CID = "__cid"
@@ -254,10 +255,10 @@ def ivf_patch(spark: SparkSession, index: IVFIndex, changes: DataFrame,
     (vector-carrying) materialization. Overflow past ``max_patch_keys``
     raises a ValueError pointing at a full rebuild, which scans
     everything once anyway and re-trains centroids — strictly better at
-    that size. Only a batch that PASSES the guard is eagerly
-    ``localCheckpoint``-ed (once — full rows), so the key relation, the
-    live-row count and the centroid-assign append all read materialized
-    rows instead of re-running the incremental lineage end to end.
+    that size. The collected keys become the changed-key relation; only
+    a batch that PASSES the guard is eagerly ``localCheckpoint``-ed (once
+    — full rows), so the live-row count and the centroid-assign append
+    read materialized rows instead of re-running the incremental lineage.
 
     The changed-key set is joined as a broadcast relation, never an
     ``isin`` literal list (guide §3): at the 1M-key bound an ``isin``
@@ -280,11 +281,10 @@ def ivf_patch(spark: SparkSession, index: IVFIndex, changes: DataFrame,
     keys = [r[0] for r in head]
     if not keys:
         return {"removed_partitions": 0, "appended": 0}
+    # driver-local key relation, broadcast into every index-side join
+    kdf = spark.createDataFrame(pa.table({"__k": keys}), changes.select(
+        F.col(id_col).alias("__k")).schema)
     changes = changes.localCheckpoint(eager=True)
-    # the changed-key relation: derived from the materialized batch (a
-    # cheap distinct over checkpoint blocks), broadcast into every
-    # index-side join below
-    kdf = changes.select(F.col(id_col).alias("__k")).distinct()
 
     data = spark.read.parquet(index.data_path)
     quantized = _CODE in data.columns
@@ -487,8 +487,6 @@ def ivf_knn_join(spark: SparkSession, index: IVFIndex, queries: DataFrame,
     batch shape is the k=3000 over-fetch (demo.ipynb c13:9)."""
     from pyspark.sql import Window
     from pyspark.sql.functions import pandas_udf
-
-    from pydata_vector_search_spark.functions.vector import distance_arrow
 
     num_centroids, dim = index.centroids.shape
     nprobe = min(nprobe, num_centroids)

@@ -10,13 +10,14 @@ Reference behavior being re-expressed (SURVEY.md §2.2):
   so `PushDownPredicate` moves it below the distance computation — true
   pre-filter hybrid search, the headline improvement (SURVEY.md §4 O1).
 
-Physical shape (verified via .explain in tests): columnar Parquet scan (with
-the filter pushed into the scan) → per-partition top-k → driver merge, i.e.
-Catalyst's ``TakeOrderedAndProject``. No global sort, no shuffle: at 100 TB /
-1000 executors each task keeps a k-row heap and ships k rows to the driver,
-so cost is scan-bound and embarrassingly parallel. The ANN path (operators/
-ann.py) prunes the scan itself; this module is the exact mode and the
-correctness oracle for it.
+Physical shape (pinned by tests): pruned columnar Parquet scan (with the
+filter pushed into the scan) → ``ArrowEvalPython`` (the distance kernel,
+identical for every query vector) → per-partition top-k → driver merge,
+i.e. Catalyst's ``TakeOrderedAndProject``. No global sort, no shuffle, no
+code compiled per query: at 100 TB / 1000 executors each task keeps a
+k-row heap and ships k rows to the driver, so cost is scan-bound and
+embarrassingly parallel. The ANN path (operators/ann.py) prunes the scan
+itself; this module is the exact mode and the correctness oracle for it.
 """
 
 from __future__ import annotations
@@ -26,9 +27,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, functions as F
 
 from pydata_vector_search_spark.functions.vector import (
+    distance_arrow,
     distance_expr,
-    distance_expr_dim,
-    distance_expr_lit,
 )
 
 
@@ -55,10 +55,8 @@ def vector_search(df: DataFrame,
         # dimension unknown at plan time → HOF (interpreted) reference form
         dist = distance_expr(metric, F.col(vector_col), query_vec)
     else:
-        # literal query vector → unrolled scalar expressions, whole-stage
-        # codegen end-to-end (~20× the HOF scan; see functions/vector)
-        dist = distance_expr_lit(metric, vector_col,
-                                 [float(v) for v in query_vec])
+        # literal query vector → Arrow numpy kernel (see functions/vector)
+        dist = distance_arrow(metric, vector_col, query_vec)
     if round_to is not None:
         dist = F.round(dist, round_to)
     out = df.withColumn(distance_col, dist)
@@ -128,8 +126,6 @@ def knn_join(left: DataFrame, right: DataFrame, vector_col: str,
     bound already proves the product exceeds ``max_pairs``.
     """
     from pyspark.sql import Window
-
-    from pydata_vector_search_spark.functions.vector import distance_arrow
 
     if max_pairs is not None:
         cap = int(max_pairs)

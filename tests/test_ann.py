@@ -446,3 +446,39 @@ def test_ivf_patch_emptied_detection_with_null_id_rows(spark, tmp_path):
     assert f"__cid={null_cid}" not in dirs
     after = spark.read.parquet(idx.data_path)
     assert after.filter(F.col("__cid") == null_cid).count() == 0
+
+
+def test_ivf_patch_runs_full_row_cdc_lineage_once(spark, tmp_path):
+    """The patch computes the full CDC rows once (its checkpoint) and
+    builds the changed-key relation from the keys its overflow guard
+    already collected, with no further pass over the batch; the guard
+    rejects an oversized batch before any full row is computed."""
+    from pydata_vector_search_spark.operators import ann
+
+    sc = spark.sparkContext
+    rows = [(i, [float(i % 4), float((i * 7) % 5) + 1.0]) for i in range(40)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    idx = ann.ivf_build(df, "embedding", str(tmp_path / "once"),
+                        num_centroids=4, seed=3)
+    computed = sc.accumulator(0)
+
+    @F.udf("array<double>")
+    def counted(v):
+        computed.add(1)
+        return v
+
+    batch = (df.filter(F.col("vec_id") < 10)
+               .withColumn("embedding", counted("embedding"))
+               .withColumn("_deleted", F.lit(False)))
+    with pytest.raises(ValueError, match="[Rr]ebuild"):
+        ann.ivf_patch(spark, idx, batch, "vec_id", max_patch_keys=5)
+    assert computed.value == 0
+    sc.setJobGroup("ivf_patch_once", "ivf_patch")
+    try:
+        out = ann.ivf_patch(spark, idx, batch, "vec_id")
+    finally:
+        sc._jsc.clearJobGroup()
+    assert out["appended"] == 10 and computed.value == 10
+    # 14 at this size; re-deriving the key relation from the checkpoint
+    # (a distinct per broadcast join) costs 2 more
+    assert len(sc.statusTracker().getJobIdsForGroup("ivf_patch_once")) <= 14

@@ -58,10 +58,50 @@ def test_postfilter_subset_of_prefilter(emb, qvec):
     assert post == pre  # fetch_k >= n → modes agree
 
 
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_plan_is_take_ordered(emb, qvec):
-    plan = knn.vector_search(emb, "embedding", qvec, k=10)._jdf \
-        .queryExecution().executedPlan().toString()
+    plan = _plan(knn.vector_search(emb, "embedding", qvec, k=10))
     assert "TakeOrderedAndProject" in plan
+
+
+def test_prefilter_plan_shape(spark, qvec, tmp_path):
+    """Pruned parquet scan with the predicate pushed → ArrowEvalPython
+    (the distance kernel) → TakeOrderedAndProject, top to bottom."""
+    spark.createDataFrame([(i, i % 5, qvec) for i in range(20)],
+                          "vec_id int, label int, embedding array<float>") \
+         .write.parquet(str(tmp_path / "e"))
+    raw = spark.read.parquet(str(tmp_path / "e"))
+    plan = _plan(knn.vector_search(raw, "embedding", qvec, k=10,
+                                   filter=F.col("label") == 3))
+    top = plan.index("TakeOrderedAndProject")
+    udf = plan.index("ArrowEvalPython")
+    scan = plan.index("FileScan parquet")
+    assert top < udf < scan
+    assert "EqualTo(label,3)" in plan.split("PushedFilters", 1)[1][:200]
+
+
+def test_plan_does_not_depend_on_query_vector(spark):
+    """No per-query code: two query vectors give the same plan once
+    expression ids are stripped, and a dim-384 plan is about as long as
+    a dim-4 one (no per-dimension terms)."""
+    import re
+
+    import numpy as np
+
+    def plan(dim, seed):
+        rng = np.random.default_rng(seed)
+        df = spark.createDataFrame(
+            [(i, rng.standard_normal(dim).tolist()) for i in range(8)],
+            "id int, v array<double>")
+        return re.sub(r"#\d+L?", "", _plan(knn.vector_search(
+            df, "v", rng.standard_normal(dim).tolist(), k=3, round_to=4,
+            tiebreaker="id")))
+
+    assert plan(384, 1) == plan(384, 2)
+    assert len(plan(384, 1)) < len(plan(4, 1)) + 50
 
 
 def test_knn_join_shapes(emb, qvec, spark):

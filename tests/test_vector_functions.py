@@ -113,15 +113,105 @@ def test_unrolled_forms_agree_with_hof(spark, sf_dir):
         assert math.isclose(r.dpc_hof, r.dpc_dim, rel_tol=1e-12, abs_tol=1e-12)
 
 
-def test_distance_expr_lit_unknown_metric(spark):
-    import pytest as _pytest
-
+def test_distance_unknown_metric(spark):
     from pydata_vector_search_spark.functions.vector import (
-        distance_expr_dim, distance_expr_lit)
-    with _pytest.raises(ValueError, match="unknown metric"):
-        distance_expr_lit("chebyshev", "v", [1.0])
-    with _pytest.raises(ValueError, match="unknown metric"):
+        distance_arrow, distance_expr_dim)
+    from pydata_vector_search_spark.operators import knn
+    with pytest.raises(ValueError, match="unknown metric"):
+        distance_arrow("chebyshev", "v", [1.0])
+    with pytest.raises(ValueError, match="unknown metric"):
+        distance_arrow("chebyshev", "a", "b")
+    with pytest.raises(ValueError, match="unknown metric"):
         distance_expr_dim("chebyshev", "a", "b", 4)
+    df = spark.createDataFrame([([1.0],)], "v array<double>")
+    with pytest.raises(ValueError, match="unknown metric"):
+        knn.vector_search(df, "v", [1.0], metric="chebyshev")
+
+
+def _search_ids(spark, rows, q, metric="cosine"):
+    from pydata_vector_search_spark.operators import knn
+    df = spark.createDataFrame(rows, "id int, v array<float>")
+    return [(r.id, r._distance) for r in knn.vector_search(
+        df, "v", q, k=len(rows), metric=metric).collect()]
+
+
+@pytest.mark.parametrize("row,n", [([0.0, 1.0, 9.0], 3), ([0.0], 1)])
+def test_vector_search_rejects_wrong_length_rows(spark, row, n):
+    """A row longer than the query was silently truncated by the unrolled
+    literal form ([0,1,9] vs [0,1] scored cosine 0.0) and a shorter one
+    raised INVALID_ARRAY_INDEX; both now raise one ValueError naming the
+    two lengths."""
+    from pydata_vector_search_spark.functions.vector import distance_arrow
+    msg = f"vector of length {n} with one of length 2"
+    with pytest.raises(Exception, match=msg):
+        _search_ids(spark, [(1, [0.0, 1.0]), (2, row)], [0.0, 1.0])
+    pair = spark.createDataFrame([([0.0, 1.0], row)],
+                                 "a array<float>, b array<float>")
+    with pytest.raises(Exception, match=msg):
+        pair.select(distance_arrow("l2", "a", "b")).collect()
+
+
+def test_vector_search_null_and_zero_vectors_keep_scalar_semantics(spark):
+    """The Arrow kernel keeps the semantics of the unrolled literal
+    expressions it replaced (still available as ``*_lit``): a NULL
+    embedding (or a NULL element) scores NULL and sorts first under
+    ``orderBy(asc)``; a zero-norm row under cosine raises like ANSI
+    DIVIDE_BY_ZERO; l2 and dot rank a zero vector normally."""
+    from pydata_vector_search_spark.functions import vector as V
+    q = [0.0, 1.0]
+    rows = [(1, [0.0, 2.0]), (2, None), (3, [1.0, 1.0]), (4, [3.0, None]),
+            (5, [3.0, -1.0])]
+    df = spark.createDataFrame(rows, "id int, v array<float>")
+    for metric, lit in (("cosine", V.cosine_distance_lit),
+                        ("l2", V.l2_distance_lit),
+                        ("dot", lambda a, q: -V.dot_product_lit(a, q))):
+        got = _search_ids(spark, rows, q, metric)
+        assert {i for i, d in got[:2]} == {2, 4}
+        assert all(d is None for _, d in got[:2])
+        want = {r.id: r.d for r in df.select("id", lit("v", q).alias("d"))
+                .collect()}
+        for i, d in got:
+            assert (d is None and want[i] is None) or \
+                math.isclose(d, want[i], rel_tol=1e-12, abs_tol=1e-12)
+    zero = [(1, [0.0, 3.0]), (2, [0.0, 0.0]), (3, [1.0, -1.0])]
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        spark.createDataFrame(zero, "id int, v array<float>") \
+             .select(V.cosine_distance_lit("v", q)).collect()
+    with pytest.raises(Exception, match="zero-norm"):
+        _search_ids(spark, zero, q)
+    assert _search_ids(spark, zero, q, "l2") == [(2, 1.0), (1, 2.0),
+                                                 (3, 5 ** 0.5)]
+    assert _search_ids(spark, zero, q, "dot") == [(1, -3.0), (2, 0.0),
+                                                  (3, 1.0)]
+
+
+@pytest.mark.parametrize("metric", ["cosine", "l2", "dot"])
+def test_vector_search_agrees_with_numpy_dim384(spark, metric):
+    """Exact top-k at dim 384 equals numpy's, raw and under
+    ``round_to=2`` + ``tiebreaker`` (ties cut by id)."""
+    from pydata_vector_search_spark.operators import knn
+    rng = np.random.default_rng(3)
+    X = rng.standard_normal((300, 384)).astype(np.float32)
+    q = rng.standard_normal(384)
+    df = spark.createDataFrame([(i, X[i].tolist()) for i in range(300)],
+                               "id int, v array<float>")
+    Xd = X.astype(np.float64)
+    want = {"cosine": 1.0 - Xd @ q / (np.linalg.norm(Xd, axis=1)
+                                      * np.linalg.norm(q)),
+            "l2": np.linalg.norm(Xd - q, axis=1),
+            "dot": -(Xd @ q)}[metric]
+    got = knn.vector_search(df, "v", q.tolist(), k=20, metric=metric) \
+             .collect()
+    assert [r.id for r in got] == np.argsort(want, kind="stable")[:20].tolist()
+    for r in got:
+        assert math.isclose(r._distance, want[r.id], rel_tol=1e-12,
+                            abs_tol=1e-12)
+    got = knn.vector_search(df, "v", q.tolist(), k=20, metric=metric,
+                            round_to=2, tiebreaker="id").collect()
+    rounded = np.round(want, 2)
+    order = sorted(range(300), key=lambda i: (rounded[i], i))[:20]
+    assert [r.id for r in got] == order
+    assert [r._distance for r in got] == [float(rounded[i]) for i in order]
 
 
 def test_sql_text_path_bit_identical_to_column_tree(spark, sf_dir):
